@@ -26,8 +26,7 @@ object TempDirs {
     // RAM-backed fs for I/O-bound sweeps. Default: java.io.tmpdir.
     val r = sys.env.get("SPARK_GRAFT_TMPROOT") match {
       case Some(base) =>
-        Files.createTempDirectory(
-          Files.createDirectories(java.nio.file.Paths.get(base)), "graft_run_")
+        Files.createTempDirectory(Files.createDirectories(baseDir(base)), "graft_run_")
       case None => Files.createTempDirectory("graft_run_")
     }
     // Liveness marker for the audit scripts' stale-scratch sweep: a
@@ -40,6 +39,16 @@ object TempDirs {
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
     r
   }
+
+  /** The `SPARK_GRAFT_TMPROOT` setting as an absolute, normalized path: a
+    * relative one resolves against the JVM's working directory once, here,
+    * so every path handed on (stream checkpoints, Spark scratch) is
+    * absolute. `tools/graft_java.sh` resolves a relative setting against
+    * the caller's directory before it changes directory, which is the
+    * working directory sbt's forked JVM starts in too.
+    */
+  private[core] def baseDir(setting: String): Path =
+    java.nio.file.Paths.get(setting).toAbsolutePath.normalize
 
   /** A fresh directory `<root>/<prefix>…` — drop-in replacement for
     * `Files.createTempDirectory(prefix)` with end-of-run cleanup.

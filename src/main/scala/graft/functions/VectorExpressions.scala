@@ -574,6 +574,21 @@ object GramHelper {
     b
   }
 
+  /** Slots of the shingle dedup table for `n` candidates: a power of two
+    * at load factor ≤ 0.5, clamped to the largest power-of-two array.
+    * Long arithmetic: in Int, 2n wraps negative for n ≥ 2^30 and would
+    * leave a 4-slot table whose probe loop never finds an empty slot. An
+    * `n` at or past the clamp fails loudly rather than probe a full table.
+    */
+  private[functions] def tableCap(n: Int): Int = {
+    val want = math.min(n.toLong * 2, 1L << 30)
+    var cap = 4
+    while (cap < want) cap <<= 1
+    if (n >= cap)
+      throw new IllegalArgumentException(s"shingles: $n candidates exceed the $cap-slot dedup table")
+    cap
+  }
+
   /** Distinct '_'-joined k-word shingles in first-occurrence order,
     * optionally binary-sorted. k-shingles exist when words ≥ k (the
     * slice-length guards in the SQL forms); a lone empty token (empty
@@ -596,9 +611,7 @@ object GramHelper {
     val nWords = b.length / 2
     val n = nWords - k + 1 // candidate shingles (one per word window)
     if (n <= 0) return new GenericArrayData(new Array[Any](0))
-    // power-of-two table, load factor ≤ 0.5
-    var cap = 4
-    while (cap < n * 2) cap <<= 1
+    val cap = tableCap(n)
     val mask = cap - 1
     val table = new Array[Int](cap)
     java.util.Arrays.fill(table, -1)

@@ -5,11 +5,11 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.ds.{ObjectStore, SparkDataSource}
+import graft.ds.{FsDataSource, ObjectStore, SparkDataSource}
 import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
 
 /** Micro-batch load from a filesystem object queue
@@ -19,12 +19,14 @@ import graft.jobclass.{Action, JobClass, JobContext, LoadOptions}
   *  1. snapshot the queue ONCE: list objects matching a filename pattern
   *     with `%Y%m%d...%Q` time captures (reference: :415-473);
   *  2. partition the snapshot against the load log on `data_file`
-  *     (reference: :137-153, 166-196 partition_loaded_objects) — the join
-  *     runs as a Spark job; `loaded` objects (left over from a crashed
-  *     prior run) are dequeued immediately, `not_loaded` go on to load;
-  *  3. load new files into the work table in bounded batches, insert into
-  *     dest (reference: :202-237), append each batch to the load log with a
-  *     NOT-IN anti-join guard (:314-330), then dequeue that batch;
+  *     (reference: :137-153, 166-196 partition_loaded_objects) with ONE
+  *     left-semi join; `loaded` objects (left over from a crashed prior
+  *     run) are dequeued immediately, `not_loaded` go on to load;
+  *  3. load new files in bounded batches, each batch's file list being its
+  *     manifest (reference: :202-237): with a `sql-file` the batch is staged
+  *     in the work table for the script, without one it is appended to
+  *     dest directly. Then append the batch to the load log with a NOT-IN
+  *     anti-join guard (:314-330) and dequeue it;
   *  4. dequeue = move each object to the persistent path (:502-514). Only
   *     objects recorded in the load log are ever moved — a file that
   *     arrives mid-load stays queued for the next run.
@@ -52,6 +54,7 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
     DataSourceParam("spark", "dest-ds", optional = true),
     DataSourceParam("spark", "redshift-ds", optional = true), // reference name (:22)
     DestTableParam(),
+    // staging table for the `sql-file` transform; unused without one
     StringParam("work-table", optional = true),
     StringParam("log-table", optional = true),
     // manifest-bucket knobs (reference :15-17); our manifest is the explicit
@@ -128,31 +131,26 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
       }
 
     // Partition a queue snapshot against the load log on data_file
-    // (reference :294-312 partition_loaded_objects). Runs as a Spark join.
-    // BOTH sides stream through toLocalIterator so an unbounded queue
-    // never sits fully in driver memory — consumers pull one dequeue/load
-    // batch of names at a time (the cursor-batch idiom,
-    // DataSource.queryBatch). The `loaded` side is usually tiny (crash
-    // leftovers from one prior run) but CAN be the whole queue listing
-    // when dequeue lags, so it gets the same treatment.
-    def partitionBySnapshot(candidates: Seq[String])
-        : (Iterator[String], Iterator[String]) = {
-      if (candidates.isEmpty) return (Iterator.empty, Iterator.empty)
+    // (reference :294-312 partition_loaded_objects): one left-semi join
+    // collects the logged names, then the driver splits the sorted
+    // snapshot — (loaded, not loaded). The driver already holds the full
+    // listing, so the collected set is never larger than it.
+    def partitionBySnapshot(candidates: Seq[String]): (Seq[String], Seq[String]) = {
+      if (candidates.isEmpty) return (Nil, Nil)
       val spark = ds.spark
       import spark.implicits._
       ensureLogTable(ds, log)
       val cand = candidates.map(r => (r, fs.urlString(r))).toDF("rel", "data_file")
-      val logged = ds.table(log).select(col("data_file"))
-      def sideIt(joinType: String): Iterator[String] = {
-        import scala.jdk.CollectionConverters._
-        cand.join(logged, Seq("data_file"), joinType)
-          .orderBy("rel").select("rel").as[String]
-          .toLocalIterator().asScala
-      }
-      (sideIt("left_semi"), sideIt("left_anti"))
+      val logged = cand.join(ds.table(log).select(col("data_file")), Seq("data_file"), "left_semi")
+        .select("rel").as[String].collect().toSet
+      candidates.sorted.partition(logged)
     }
 
-    val batchSize = p.longOpt("batch-size").map(_.toInt).getOrElse(100000)
+    val batchSize = p.longOpt("batch-size").map { n =>
+      if (n > Int.MaxValue)
+        throw new ParameterError(s"batch-size: at most ${Int.MaxValue} files per batch: $n")
+      n.toInt
+    }.getOrElse(100000)
 
     if (p.bool("streaming"))
       // Structured Streaming mode: the checkpointed file source IS the load
@@ -213,14 +211,15 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
       // ONE queue snapshot drives the whole run (reference :166-170):
       // files arriving after this point are next run's work.
       val (alreadyLoaded, newFiles) = partitionBySnapshot(listCandidates())
-      // leftovers from a crashed prior run: logged but never dequeued.
-      // Batched pulls off the iterator — never the whole listing at once.
+      // leftovers from a crashed prior run: logged but never dequeued
       if (!p.bool("load-only"))
         alreadyLoaded.grouped(batchSize).foreach(b => dequeue(fs, queuePath, b, p, vars))
       if (newFiles.nonEmpty) {
         val spark = ds.spark
         import spark.implicits._
         val jobProcessId = java.util.UUID.randomUUID().toString
+        // reference :31: skip-work ignores the transform and loads directly
+        val sqlFile = if (p.bool("skip-work")) None else p.stringOpt("sql-file")
         // bounded batches keep the driver-side manifest and the
         // crash-replay window small (reference loads one manifest per run;
         // an unbounded queue would otherwise sit in driver memory)
@@ -229,32 +228,31 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
           val startTime = java.sql.Timestamp.from(java.time.Instant.now())
           // explicit file list = the reference's manifest (:207-226); COPY
           // options map through LoadOptions semantics
-          val reader = spark.read.schema(ds.table(dest).schema)
-          val df = p.string("format") match {
-            case "json"    => reader.json(batch: _*)
-            case "tsv"     => reader.option("sep", "\t").csv(batch: _*)
-            case "csv"     => reader.csv(batch: _*)
-            case "parquet" => reader.parquet(batch: _*)
-          }
-          if (p.bool("skip-work")) {
-            // reference :31: "Skip work table and load directly into
-            // dest-table" — one append, no staging
-            df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
-          } else {
-            // load work table from the new files only (:165,202-237), then
-            // commit via user SQL or INSERT SELECT *
-            ds.dropForce(work)
-            df.write.saveAsTable(ds.qualify(work))
-            p.stringOpt("sql-file") match {
-              case Some(sf) =>
-                val stmt = bindSql(ctx.sqlText(sf, vars),
-                  vars.add("work_table", ds.qualify(work))
-                    .add("dest_table", ds.qualify(dest)), ctx)
-                ds.execScript(stmt)
-              case None =>
-                ds.sql(s"INSERT INTO ${ds.qualify(dest)} SELECT * FROM ${ds.qualify(work)}")
+          val df = readManifest(spark, fs, batch.size) {
+            val reader = spark.read.schema(ds.table(dest).schema)
+            p.string("format") match {
+              case "json"    => reader.json(batch: _*)
+              case "tsv"     => reader.option("sep", "\t").csv(batch: _*)
+              case "csv"     => reader.csv(batch: _*)
+              case "parquet" => reader.parquet(batch: _*)
             }
-            ds.dropForce(work)
+          }
+          sqlFile match {
+            case Some(sf) =>
+              // stage the new files in the work table (:165,202-237), then
+              // commit through the user's SQL
+              ds.dropForce(work)
+              df.write.saveAsTable(ds.qualify(work))
+              val stmt = bindSql(ctx.sqlText(sf, vars),
+                vars.add("work_table", ds.qualify(work))
+                  .add("dest_table", ds.qualify(dest)), ctx)
+              ds.execScript(stmt)
+              ds.dropForce(work)
+            case None =>
+              // no transform to run: append straight into dest — one
+              // write job that commits or aborts as a whole, so a failed
+              // batch leaves dest untouched
+              df.write.mode(SaveMode.Append).insertInto(ds.qualify(dest))
           }
           // append load log w/ NOT-IN guard (:314-330)
           val endTime = java.sql.Timestamp.from(java.time.Instant.now())
@@ -275,6 +273,26 @@ object StreamingLoadJobClass extends JobClass("streaming_load") {
     }
 
     Seq(loadAction)
+  }
+
+  /** Run `read`, which builds a relation over a batch's explicit list of
+    * `files` paths. Spark lists more than 32 paths
+    * (`parallelPartitionDiscovery.threshold`) with a distributed job, which
+    * for a manifest just enumerated only re-stats known files, so on the
+    * local filesystem the threshold covers the batch while Spark builds
+    * (and lists) the relation. An s3a store keeps the distributed listing:
+    * a 100k-file default batch must not be stat'ed serially on the driver.
+    */
+  private def readManifest(spark: SparkSession, fs: ObjectStore, files: Int)(
+      read: => DataFrame): DataFrame = fs match {
+    case _: FsDataSource =>
+      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      val conf = spark.conf
+      val prev = conf.getAll.get(key) // None when only the default applies
+      if (files > conf.get(key).toInt) conf.set(key, files.toLong)
+      try read
+      finally prev.fold(conf.unset(key))(conf.set(key, _))
+    case _ => read
   }
 
   private def ensureLogTable(ds: SparkDataSource, log: TableSpec): Unit =

@@ -278,3 +278,14 @@ class JobFileSpec extends AnyFunSuite {
     assert(jf.jobClass == "exec")
   }
 }
+
+class TempDirsSpec extends AnyFunSuite {
+
+  test("SPARK_GRAFT_TMPROOT resolves to one absolute, normalized path") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    assert(TempDirs.baseDir("scratch/../tmproot") == cwd.resolve("tmproot"))
+    assert(TempDirs.baseDir("tmproot").isAbsolute)
+    val abs = cwd.resolve("a").resolve("b")
+    assert(TempDirs.baseDir(abs.toString + "/./") == abs)
+  }
+}

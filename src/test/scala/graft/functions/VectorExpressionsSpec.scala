@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -127,5 +129,20 @@ class VectorExpressionsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
+  }
+
+  test("shingle dedup table sizing never wraps and never leaves a full table") {
+    import GramHelper.tableCap
+    assert(tableCap(1) == 4 && tableCap(2) == 4 && tableCap(3) == 8 && tableCap(1000) == 2048)
+    // 2n past Int range still sizes up to the clamp, never down to 4 slots
+    assert(tableCap((1 << 29) + 1) == (1 << 30))
+    assert(tableCap((1 << 30) - 1) == (1 << 30))
+    // at the clamp there is no free slot left to end a probe: fail loudly
+    val e = intercept[IllegalArgumentException](tableCap(1 << 30))
+    assert(e.getMessage.contains("dedup table"))
+    intercept[IllegalArgumentException](tableCap(Int.MaxValue))
+    // the sized table still dedups in first-occurrence order
+    val out = GramHelper.shingles(UTF8String.fromString("a b a b a b c"), 2, sorted = false)
+    assert(out.toObjectArray(StringType).map(_.toString).toSeq == Seq("a_b", "b_a", "b_c"))
   }
 }

@@ -22,6 +22,11 @@
 # starts. Left off for the default 8g runs: their lazy-touch tax is
 # small and bounded, and wall-clock (pipeline bench) stays lean.
 set -e
+# a relative SPARK_GRAFT_TMPROOT names a directory under the caller's one
+if [ -n "${SPARK_GRAFT_TMPROOT:-}" ]; then
+  SPARK_GRAFT_TMPROOT="$(realpath -m "$SPARK_GRAFT_TMPROOT")"
+  export SPARK_GRAFT_TMPROOT
+fi
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
 PRETOUCH_FLAGS=""
